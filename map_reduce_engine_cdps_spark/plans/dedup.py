@@ -709,6 +709,13 @@ def connected_components(
     ``doc_a, doc_b``. Returns (doc_id, comp) where comp is the minimum
     doc_id reachable from doc_id. Factored out of near_dup_clusters so
     the convergence semantics are unit-testable on hand-built graphs.
+
+    Precondition: every ``doc_a``/``doc_b`` endpoint is a ``doc_id`` in
+    ``vertices`` (true for every caller: pairs derive from the same
+    docs table). It is not checked. A stray endpoint comes out as an
+    extra row labelled with the smallest vertex that reaches it (never
+    its own id), and it joins the components of its neighbours
+    (pinned by ``test_connected_components_stray_endpoint``).
     """
     # Undirected: propagate both ways. Materialize once — every round
     # reuses the edge list, and recomputing the upstream pipeline per

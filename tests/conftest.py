@@ -5,12 +5,15 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+TESTS = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(TESTS)
+sys.path.insert(0, ROOT)
 # Executor python workers must be able to unpickle functions defined in
-# test modules → put repo + tests on their import path before the JVM
-# (and thus the python workers) start.
+# test modules, and start the engine's daemon module → put this
+# checkout + its tests on their import path before the JVM (and thus
+# the python workers) start.
 os.environ["PYTHONPATH"] = (
-    "/root/repo:/root/repo/tests:" + os.environ.get("PYTHONPATH", "")
+    f"{ROOT}:{TESTS}:" + os.environ.get("PYTHONPATH", "")
 )
 
 from map_reduce_engine_cdps_spark.session import get_spark

@@ -102,6 +102,24 @@ def test_connected_components_transitivity(spark):
     assert got == {0: 0, 1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5}
 
 
+def test_connected_components_stray_endpoint(spark):
+    """Pins today's output for pairs whose endpoints are missing from
+    ``vertices`` (a broken precondition): stray 9 links vertices 1 and
+    5 into one component, and strays 0 and 9 come out as extra rows
+    labelled by the smallest vertex reaching them, not by their own id."""
+    from map_reduce_engine_cdps_spark.plans.dedup import connected_components
+
+    vertices = spark.createDataFrame([(1,), (2,), (5,)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(1, 9), (5, 9), (2, 0)], "doc_a long, doc_b long"
+    )
+    got = {
+        r["doc_id"]: r["comp"]
+        for r in connected_components(vertices, pairs).collect()
+    }
+    assert got == {0: 2, 1: 1, 2: 2, 5: 1, 9: 1}
+
+
 def test_window_hashes_edges(spark):
     """Short-doc guard (Spark's sequence() counts DOWN when stop < 1):
     size < w → empty array, size == w → exactly one window, size == w+1
